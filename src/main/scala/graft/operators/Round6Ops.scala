@@ -198,11 +198,15 @@ object Round6Ops {
         | CAST(year(max(l_shipdate)) * 10000 + month(max(l_shipdate)) * 100 + day(max(l_shipdate)) AS BIGINT) AS max_ship
         |FROM lineitem""".stripMargin) { (s, d) =>
       // Aggregate pushdown needs the DSv2 parquet path; both confs are
-      // flipped only around the EAGER materialization (localCheckpoint)
-      // and restored in finally, so no other query's plan is affected.
-      // min/max/count run against footers (plan shows
-      // PushedAggregation); the date→int render happens in an outer
-      // projection AFTER the pushed aggregate.
+      // flipped only around the read and the optimizer run
+      // (V2ScanRelationPushDown fixes the pushed aggregate into this
+      // DataFrame's optimized plan) and restored in finally, so no
+      // other query's plan is affected and nothing is materialized
+      // eagerly (a DataFrame derived from this one re-optimizes under
+      // the restored confs: same values, plain v2 scan). min/max/count
+      // run against footers (plan shows PushedAggregation); the
+      // date→int render happens in an outer projection AFTER the
+      // pushed aggregate.
       val conf = s.conf
       val oldAgg = conf.getOption("spark.sql.parquet.aggregatePushdown")
       val oldV1 = conf.getOption("spark.sql.sources.useV1SourceList")
@@ -210,7 +214,7 @@ object Round6Ops {
         conf.set("spark.sql.parquet.aggregatePushdown", "true")
         conf.set("spark.sql.sources.useV1SourceList",
           "avro,csv,json,kafka,orc,text")
-        Tables(s, d, "lineitem")
+        val df = Tables(s, d, "lineitem")
           .agg(count(lit(1)).as("n_rows"),
             min("l_orderkey").as("min_key"), max("l_orderkey").as("max_key"),
             min("l_shipdate").as("mins"), max("l_shipdate").as("maxs"))
@@ -219,7 +223,8 @@ object Round6Ops {
               + dayofmonth(col("mins"))).cast("long").as("min_ship"),
             (year(col("maxs")) * 10000 + month(col("maxs")) * 100
               + dayofmonth(col("maxs"))).cast("long").as("max_ship"))
-          .localCheckpoint()
+        df.queryExecution.optimizedPlan
+        df
       } finally {
         oldAgg.fold(conf.unset("spark.sql.parquet.aggregatePushdown"))(
           v => conf.set("spark.sql.parquet.aggregatePushdown", v))

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.expressions.VectorExpressions
 import graft.functions.VectorFunctions
+import graft.sources.Tables
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -14,7 +15,7 @@ object Microbench {
     val spark = LocalSession()
     VectorExpressions.register(spark)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val e = spark.read.parquet(s"$d/embeddings.parquet").filter(col("vec_id") < 500)
+    val e = Tables(spark, d, "embeddings").filter(col("vec_id") < 500)
     val a = e.select(col("vec_id").as("ia"), col("embedding").as("va"))
     val b = e.select(col("vec_id").as("ib"), col("embedding").as("vb"))
     val pairs = a.join(b, col("ia") < col("ib"))

@@ -387,7 +387,7 @@ object PlanLint {
         qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
   }
 
-  private def waitForListenerBus(spark: org.apache.spark.sql.SparkSession): Unit = {
+  private[graft] def waitForListenerBus(spark: org.apache.spark.sql.SparkSession): Unit = {
     // Reflects into private[spark] SparkContext.listenerBus /
     // LiveListenerBus.waitUntilEmpty(long) — pinned to the Spark this
     // repo builds against. If an upgrade renames either, fall back to a

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.plans.RangeBandJoinRule
+import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
 /** Naive (nested-loop) vs RangeBandJoinRule-banded range join, same
@@ -11,7 +12,7 @@ object RangeJoinBench {
   def main(args: Array[String]): Unit = {
     val spark = LocalSession()
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val p = spark.read.parquet(s"$d/part.parquet")
+    val p = Tables(spark, d, "part")
     val a = p.select(col("p_partkey").as("pk"),
       (col("p_retailprice") - 5.0).as("lo"), (col("p_retailprice") + 5.0).as("hi"))
     val b = p.select(col("p_retailprice").as("bp"))

@@ -67,7 +67,17 @@ class Round6OpsSpec extends SparkSpec {
   }
 
   test("q_scan_21_agg_pushdown: values match a plain scan AND the v2 plan pushes the aggregate") {
-    val got = Registry.byName("q_scan_21_agg_pushdown").fn(spark, sf).collect().head
+    val aggKey = "spark.sql.parquet.aggregatePushdown"
+    val v1Key = "spark.sql.sources.useV1SourceList"
+    val before = (spark.conf.getOption(aggKey), spark.conf.getOption(v1Key))
+    val df = Registry.byName("q_scan_21_agg_pushdown").fn(spark, sf)
+    assert((spark.conf.getOption(aggKey), spark.conf.getOption(v1Key)) == before,
+      "q_scan_21 must restore both confs it flips")
+    // the query's OWN plan answers from footers, although it is planned
+    // after the confs were restored
+    val own = df.queryExecution.executedPlan.toString
+    assert(own.contains("PushedAggregation"), own.take(800))
+    val got = df.collect().head
     val li = graft.sources.Tables(spark, sf, "lineitem")
     val exp = li.agg(count(lit(1)), min("l_orderkey"), max("l_orderkey")).collect().head
     assert(got.getLong(0) == exp.getLong(0))

@@ -30,6 +30,9 @@ java $ADD_OPENS -Xmx8g -cp "$CP" graft.tools.PlanLint /root/testdata/sf0.001 too
 # possibly-growing relation inside an iterative loop — waivers must cite
 # a constant bound (tools/broadcast_waivers.txt)
 python3 tools/broadcast_lint.py
+# fixture-read lint: src/main reads the fixture tables only through
+# graft.sources.Tables (events.ts fix + per-application schema cache)
+python3 tools/table_read_lint.py
 # INDEX.md: REGENERATE and stage, then check — regenerating here (not
 # just checking) closes the r11 gate-ordering hole where a post-gate
 # source edit left the committed INDEX.md stale by one line. The final
